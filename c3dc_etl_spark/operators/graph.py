@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from c3dc_etl_spark.functions.local import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -113,14 +115,26 @@ def connected_components(
 
 
 def _seed_node_type(edges: DataFrame, src: str, source) -> str:
-    """Schema for a frontier seed: LONG for int seeds, STRING for str —
-    validated against the edge list's ``src`` dtype so a mismatched
-    seed FAILS FAST instead of compiling into an implicit-cast join
-    that silently returns an empty frontier (ADVICE r12 #2). bool is
-    rejected explicitly (isinstance(True, int) is True, and a boolean
-    seed building a LONG schema is always a caller bug)."""
+    """Type of a frontier seed's node column, validated against the
+    edge list's ``src`` dtype so a mismatched seed FAILS FAST instead of
+    compiling into an implicit-cast join that silently returns an empty
+    frontier (ADVICE r12 #2). The contract, per edge column type:
+
+    - BYTE/SHORT/INT/BIGINT: int seed, typed LONG (the node column of
+      the result is LONG);
+    - DECIMAL(p,0), the shape some parquet ingests give integer ids:
+      int seed with ``|seed| < 10**p``, typed as the edge column's own
+      DECIMAL(p,0), so every round joins decimal to decimal with no
+      widening cast; an out-of-range seed raises ValueError. A DECIMAL
+      with a fractional scale is not a node id and raises TypeError;
+    - STRING: str seed, typed STRING.
+
+    Any other pairing raises TypeError. bool is rejected explicitly
+    (isinstance(True, int) is True, and a boolean seed building a LONG
+    schema is always a caller bug)."""
     from pyspark.sql.types import (
         ByteType,
+        DecimalType,
         IntegerType,
         LongType,
         ShortType,
@@ -134,6 +148,13 @@ def _seed_node_type(edges: DataFrame, src: str, source) -> str:
         )
     edge_t = edges.schema[src].dataType
     if isinstance(source, int):
+        if isinstance(edge_t, DecimalType) and edge_t.scale == 0:
+            if abs(source) >= 10**edge_t.precision:
+                raise ValueError(
+                    f"int seed {source!r} does not fit edge column "
+                    f"{src}: {edge_t.simpleString()}"
+                )
+            return f"DECIMAL({edge_t.precision},0)"
         if not isinstance(edge_t, (ByteType, ShortType, IntegerType, LongType)):
             raise TypeError(
                 f"int seed {source!r} over non-integral edge column "
@@ -181,9 +202,10 @@ def bfs_hops(
     # every round; results are identical because callers decode at the
     # end of the pipeline)
     node_type = _seed_node_type(edges, src, source)
-    visited = spark.createDataFrame(
-        [(source, 0)], f"node {node_type}, hops BIGINT"
-    ).localCheckpoint(eager=True)
+    # a LocalRelation seed: no Python-worker job, no lineage to cut
+    visited = local_frame(
+        spark, [(source, 0)], f"node {node_type}, hops BIGINT"
+    )
     frontier = visited
     for hop in range(1, max_hops + 1):
         nxt = (
@@ -231,9 +253,9 @@ def sssp_bounded(
     # long-encoded seed support, same contract (and fail-fast seed
     # validation) as bfs_hops
     node_type = _seed_node_type(edges, src, source)
-    dist = edges.sparkSession.createDataFrame(
-        [(source, 0)], f"node {node_type}, dist BIGINT"
-    ).localCheckpoint(eager=True)
+    dist = local_frame(
+        edges.sparkSession, [(source, 0)], f"node {node_type}, dist BIGINT"
+    )
     for _ in range(rounds):
         relaxed = dist.join(e, dist["node"] == e["u"]).select(
             F.col("v").alias("node"),

@@ -34,14 +34,23 @@ here:
   dot-prefixed manifest temps; both are swept by ``vacuum``. A writer
   dying after the link is a COMPLETE commit. There is no intermediate.
 - **Per-file column stats** (min/max/rows on a designated key column,
-  computed in ONE Spark job over the landed files) ride in the commit
-  manifest, exactly like Delta's add-file stats / Iceberg's manifest
-  entries. They serve two scale jobs: ``read`` with a key predicate
-  opens only the files whose [min, max] envelope intersects it (file
-  skipping — the manifest-level complement of parquet row-group
-  pruning), and ``merge_upsert`` rewrites ONLY the files whose envelope
-  contains a changed key (copy-on-write MERGE: at 100 TB a CDC batch
-  touching 0.1 % of keys must not rewrite the other 99.9 % of files).
+  read from the parquet footers the writer just landed — no Spark job;
+  an envelope a footer cannot prove is left out, which every consumer
+  treats as stats-absent) ride in the commit manifest, exactly like
+  Delta's add-file stats / Iceberg's manifest entries. They serve two
+  scale jobs: ``read`` with a key predicate opens only the files whose
+  [min, max] envelope intersects it (file skipping — the
+  manifest-level complement of parquet row-group pruning), and
+  ``merge_upsert`` rewrites ONLY the files whose envelope contains a
+  changed key (copy-on-write MERGE: at 100 TB a CDC batch touching
+  0.1 % of keys must not rewrite the other 99.9 % of files).
+- **Recorded read schemas.** Each added file's manifest entry also
+  carries its Spark schema (the footer's, made nullable as Spark's
+  reader makes it), so every internal read of a file set that recorded
+  one common schema skips Spark's schema-inference job — Delta keeps
+  the schema in its log for the same reason. ``merge_schema`` reads,
+  mixed-schema file sets and legacy entries fall back to inference.
+  Deletion-vector sidecars always read as ``file string, pos bigint``.
 - **Checkpoint manifests.** Every ``checkpoint_interval`` commits the
   full live state (files + stats) lands as ``<v>.checkpoint.json``;
   replay starts from the newest checkpoint at-or-below the requested
@@ -67,6 +76,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from c3dc_etl_spark.functions.local import local_frame
+
 
 class CommitConflict(RuntimeError):
     """A concurrent commit removed files this transaction also removes
@@ -82,6 +93,160 @@ class ConstraintViolation(ValueError):
 
 def _fmt_version(v: int) -> str:
     return f"{v:020d}.json"
+
+
+# footer key under which Spark's parquet writer records the frame schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# deletion-vector sidecars: always exactly these columns (_land_dv_file)
+_DV_SCHEMA = "file string, pos bigint"
+
+
+def _as_nullable(t):
+    """Spark's ``DataType.asNullable`` over a JSON-form type: every
+    struct field, array element and map value becomes nullable — what
+    Spark's file reader does to any schema it reads with, inferred or
+    user-given. Raises ValueError on a type it does not know (UDTs), so
+    such a file records no schema and reads fall back to inference."""
+    if not isinstance(t, dict):
+        return t  # an atomic type name ("long", "decimal(12,2)", ...)
+    kind = t.get("type")
+    if kind == "struct":
+        return {
+            **t,
+            "fields": [
+                {**f, "nullable": True, "type": _as_nullable(f["type"])}
+                for f in t["fields"]
+            ],
+        }
+    if kind == "array":
+        return {
+            **t,
+            "containsNull": True,
+            "elementType": _as_nullable(t["elementType"]),
+        }
+    if kind == "map":
+        return {
+            **t,
+            "valueContainsNull": True,
+            "keyType": _as_nullable(t["keyType"]),
+            "valueType": _as_nullable(t["valueType"]),
+        }
+    raise ValueError(f"no nullable form known for type {kind!r}")
+
+
+def _footer_envelope(md, arrow_schema, col: str):
+    """[min, max] of top-level column ``col`` over every row group of
+    one parquet footer, or None when the footer cannot PROVE Spark's
+    envelope: a row group holding non-null values without min/max
+    (e.g. a >4 KB string, whose stats the writer drops), or a
+    float/double column (parquet's NaN and -0.0 ordering is not
+    Spark's). An all-NULL column has no envelope either. A column of a
+    type whose values do not round-trip JSON in order (date, decimal,
+    timestamp, binary, nested) raises TypeError when it holds a value."""
+    import pyarrow.types as pat
+
+    at = arrow_schema.field(col).type
+    leaf = next(
+        (
+            i for i in range(md.num_columns)
+            if md.schema.column(i).path == col
+        ),
+        None,
+    )
+    provable = leaf is not None and not pat.is_floating(at)
+    orderable = (
+        pat.is_integer(at) or pat.is_string(at) or pat.is_large_string(at)
+        or pat.is_boolean(at) or pat.is_floating(at)
+    )
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        group = md.row_group(rg)
+        st = group.column(leaf).statistics if leaf is not None else None
+        if st is not None and st.has_null_count and (
+            st.null_count >= group.num_rows
+        ):
+            continue  # all-NULL row group: nothing to bound
+        if not orderable:
+            # stats must round-trip JSON with their ORDER intact: a
+            # str()-coerced date/Decimal would later compare against
+            # native-typed keys (TypeError in bisect / key_between).
+            # Fail at write time with the fix in hand, not at read time.
+            raise TypeError(
+                f"stats_col {col!r} has non-JSON-orderable type {at}; use "
+                "an int/float/str key (cast dates/timestamps to epoch "
+                "days/micros upstream)"
+            )
+        if st is None or not st.has_min_max:
+            provable = False
+            continue
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    if not provable or lo is None:
+        return None
+    return lo, hi
+
+
+def _footer_entry(path: str, stats_col: str | None, extra_cols) -> dict:
+    """The manifest stats entry of one landed file, from its parquet
+    footer alone: the recorded read ``schema`` (Spark's footer schema
+    made nullable), and — with a ``stats_col`` present in the file and
+    at least one row — ``col``/``rows``/``min``/``max`` plus ``cols``
+    envelopes for the ``extra_cols`` it holds. Envelopes the footer
+    cannot prove are left out (stats-absent = conservative). A zero-row
+    file records no stats, as a per-file aggregate yields no row for
+    it."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    out: dict = {}
+    raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw:
+        try:
+            out["schema"] = _as_nullable(json.loads(raw))
+        except ValueError:
+            pass
+    arrow_schema = md.schema.to_arrow_schema()
+    if (
+        stats_col is None
+        or md.num_rows == 0
+        or stats_col not in arrow_schema.names
+    ):
+        return out
+    out.update(col=stats_col, rows=md.num_rows)
+    env = _footer_envelope(md, arrow_schema, stats_col)
+    if env is not None:
+        out["min"], out["max"] = env
+    cols = {}
+    for c in extra_cols:
+        if c in arrow_schema.names:
+            e = _footer_envelope(md, arrow_schema, c)
+            if e is not None:
+                cols[c] = {"min": e[0], "max": e[1]}
+    if cols:
+        out["cols"] = cols
+    return out
+
+
+def _recorded_schema(stats: dict, names: list[str]):
+    """The read schema every file of ``names`` recorded at land time,
+    as a StructType — or None when any file recorded none (a legacy
+    entry) or two files recorded different ones. A mixed set must go
+    to Spark's inference: it does not take the first path's footer, so
+    no single file's schema is the answer."""
+    from pyspark.sql.types import StructType
+
+    first = None
+    for n in names:
+        sch = (stats.get(n) or {}).get("schema")
+        if sch is None or (first is not None and sch != first):
+            return None
+        first = sch
+    if first is None:
+        return None
+    try:
+        return StructType.fromJson(first)
+    except (KeyError, TypeError, ValueError):
+        return None
 
 
 class TableLog:
@@ -105,8 +270,8 @@ class TableLog:
         self.log_dir = os.path.join(self.table_dir, "_log")
         self.stats_col = stats_col
         # secondary per-file [min, max] envelopes (no landing-layout
-        # role, unlike stats_col): recorded in the same one-job stats
-        # pass, consumed by multi-column manifest pruning (read
+        # role, unlike stats_col): read from the same footers as the
+        # key stats, consumed by multi-column manifest pruning (read
         # col_between) — the companion of optimize_zorder, whose
         # clustered files get tight envelopes on BOTH dimensions
         self.extra_stats_cols = list(extra_stats_cols or [])
@@ -324,11 +489,49 @@ class TableLog:
             _apply,
         )
 
+    def _read_parquet(
+        self,
+        spark: SparkSession,
+        names: list[str],
+        stats: dict,
+        *,
+        merge_schema: bool = False,
+    ) -> DataFrame:
+        """Plain scan of data files ``names``, with the read schema
+        their manifest ``stats`` entries recorded — Spark then skips
+        its schema-inference job. Falls back to inference for
+        ``merge_schema`` (the union of the files' schemas) and wherever
+        :func:`_recorded_schema` finds no single recorded schema."""
+        paths = [os.path.join(self.table_dir, n) for n in names]
+        reader = spark.read
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            schema = _recorded_schema(stats, names)
+            if schema is not None:
+                reader = reader.schema(schema)
+        return reader.parquet(*paths)
+
+    @staticmethod
+    def _with_row_id(df: DataFrame) -> DataFrame:
+        """``df`` plus its rows' (``__file`` basename, ``__pos`` parquet
+        row index) identity from the ``_metadata`` hidden column."""
+        from pyspark.sql import functions as F
+
+        return df.select(
+            "*",
+            F.element_at(
+                F.split(F.col("_metadata.file_path"), "/"), -1
+            ).alias("__file"),
+            F.col("_metadata.row_index").alias("__pos"),
+        )
+
     def _scan_files(
         self,
         spark: SparkSession,
         names: list[str],
         *,
+        stats: dict,
         merge_schema: bool = False,
         dvm: dict[str, str] | None = None,
     ) -> DataFrame:
@@ -344,29 +547,18 @@ class TableLog:
         or a ``purge_deletes`` rewrite, which this class also offers).
         Filters on data columns still push below the anti-join (its
         keys are the metadata columns only), so file skipping and
-        row-group pruning are unaffected."""
+        row-group pruning are unaffected. ``stats`` (name -> manifest
+        entry) supplies the recorded read schema."""
         from pyspark.sql import functions as F
 
         dvm = self._dv_map_checked(None) if dvm is None else dvm
-        paths = [os.path.join(self.table_dir, n) for n in names]
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*paths)
+        df = self._read_parquet(spark, names, stats, merge_schema=merge_schema)
         names_set = set(names)
         active = {n: d for n, d in dvm.items() if n in names_set}
         if not active:
             return df
-        cols = df.columns
-        tagged = df.select(
-            "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
         dv = self._read_dv_rows(spark, active)
-        return tagged.join(
+        return self._with_row_id(df).join(
             F.broadcast(
                 dv.select(
                     F.col("file").alias("__file"), F.col("pos").alias("__pos")
@@ -374,7 +566,7 @@ class TableLog:
             ),
             ["__file", "__pos"],
             "left_anti",
-        ).select(*cols)
+        ).select(*df.columns)
 
     def _read_dv_rows(
         self, spark: SparkSession, active: dict[str, str]
@@ -386,17 +578,19 @@ class TableLog:
         from pyspark.sql import functions as F
 
         paths = sorted(set(active.values()))
-        dv = spark.read.parquet(
-            *[os.path.join(self.table_dir, p) for p in paths]
-        ).select(
-            "file",
-            "pos",
-            F.element_at(
-                F.split(F.input_file_name(), "/"), -1
-            ).alias("src"),
+        dv = (
+            spark.read.schema(_DV_SCHEMA)
+            .parquet(*[os.path.join(self.table_dir, p) for p in paths])
+            .select(
+                "file",
+                "pos",
+                F.element_at(
+                    F.split(F.input_file_name(), "/"), -1
+                ).alias("src"),
+            )
         )
-        pairs = spark.createDataFrame(
-            [(f, d) for f, d in active.items()], "file string, src string"
+        pairs = local_frame(
+            spark, list(active.items()), "file string, src string"
         )
         return dv.join(F.broadcast(pairs), ["file", "src"], "left_semi").select(
             "file", "pos"
@@ -636,85 +830,22 @@ class TableLog:
     def _file_stats(
         self, spark: SparkSession, names: list[str]
     ) -> dict[str, dict]:
-        """min/max/rows of ``stats_col`` per landed file — plus [min,
-        max] envelopes for every ``extra_stats_cols`` column present —
-        in ONE Spark job (group by input_file_name over a single
-        multi-file scan). With a ``bloom_col`` configured, a second
-        one-job pass attaches a per-file Bloom bitset for point-lookup
-        skipping (``_file_blooms``)."""
-        if not names or (self.stats_col is None and self.bloom_col is None):
-            return {}
-        if self.stats_col is None:
-            out: dict[str, dict] = {}
-            self._attach_blooms(spark, names, out)
-            return out
-        from pyspark.sql import functions as F
-
-        paths = [os.path.join(self.table_dir, n) for n in names]
-        scan = spark.read.parquet(*paths)
-        if self.stats_col not in scan.columns:
-            out = {}
-            self._attach_blooms(spark, names, out)
-            return out
-        extras = [c for c in self.extra_stats_cols if c in scan.columns]
-        rows = (
-            scan.groupBy(
-                F.element_at(
-                    F.split(F.input_file_name(), "/"), -1
-                ).alias("__file")
-            )
-            .agg(
-                F.min(self.stats_col).alias("mn"),
-                F.max(self.stats_col).alias("mx"),
-                F.count(F.lit(1)).alias("rows"),
-                *[
-                    x
-                    for c in extras
-                    for x in (
-                        F.min(c).alias(f"mn_{c}"),
-                        F.max(c).alias(f"mx_{c}"),
-                    )
-                ],
-            )
-            .collect()  # bounded: one row per landed file
-        )
-
-        def _plain(v):
-            # stats must round-trip JSON with their ORDER intact: a
-            # str()-coerced date/Decimal would later compare against
-            # native-typed keys (TypeError in bisect / key_between).
-            # Fail at write time with the fix in hand, not at read time.
-            if v is None or isinstance(v, (int, float, str)):
-                return v
-            raise TypeError(
-                f"stats_col {self.stats_col!r} has non-JSON-orderable "
-                f"type {type(v).__name__}; use an int/float/str key "
-                "(cast dates/timestamps to epoch days/micros upstream)"
-            )
-
+        """Manifest stats entry per landed file, read from the parquet
+        footers just written — no Spark job (:func:`_footer_entry`):
+        the recorded read schema, and with a ``stats_col`` the
+        min/max/rows of it plus [min, max] envelopes for every
+        ``extra_stats_cols`` column present. With a ``bloom_col``
+        configured, a one-job pass attaches a per-file Bloom bitset for
+        point-lookup skipping (``_attach_blooms``)."""
         out: dict[str, dict] = {}
-        for r in rows:
-            st = {"col": self.stats_col, "rows": r["rows"]}
-            # a file whose stats_col values are ALL NULL aggregates to
-            # min=max=None; recording JSON nulls would later compare
-            # None against real keys (TypeError in bisect/key pruning).
-            # Omit the envelope instead: every consumer treats a
-            # missing "min" as stats-absent and conservatively keeps /
-            # touches the file.
-            if r["mn"] is not None:
-                st["min"] = _plain(r["mn"])
-                st["max"] = _plain(r["mx"])
-            env = {
-                c: {
-                    "min": _plain(r[f"mn_{c}"]),
-                    "max": _plain(r[f"mx_{c}"]),
-                }
-                for c in extras
-                if r[f"mn_{c}"] is not None
-            }
-            if env:
-                st["cols"] = env
-            out[r["__file"]] = st
+        for n in names:
+            entry = _footer_entry(
+                os.path.join(self.table_dir, n),
+                self.stats_col,
+                self.extra_stats_cols,
+            )
+            if entry:
+                out[n] = entry
         self._attach_blooms(spark, names, out)
         return out
 
@@ -750,8 +881,7 @@ class TableLog:
             return
         from pyspark.sql import functions as F
 
-        paths = [os.path.join(self.table_dir, n) for n in names]
-        scan = spark.read.parquet(*paths)
+        scan = self._read_parquet(spark, names, out)
         if self.bloom_col not in scan.columns:
             return
         v = F.col(self.bloom_col).cast("string")
@@ -1177,14 +1307,15 @@ class TableLog:
         # read time would silently duplicate the rows of any file a
         # racer commits between the two resolutions
         base = self.latest_version()
-        current = self.files(base)
+        base_snap = self.snapshot(base)
+        current = list(base_snap)
         if not current:
             raise ValueError(f"table {self.table_dir} has no committed data")
         # DV-aware rewrite: deleted rows must not resurrect through the
         # compaction, and since the DV'd files are in the remove list,
         # their vectors retire with them (a compact doubles as a purge)
         base_dvm = self._dv_map_checked(base)
-        df = self._scan_files(spark, current, dvm=base_dvm)
+        df = self._scan_files(spark, current, dvm=base_dvm, stats=base_snap)
 
         def _validate(head):
             # a racer's deletion vector changes the content this rewrite
@@ -1238,13 +1369,14 @@ class TableLog:
         from c3dc_etl_spark.operators.warehouse import morton_key
 
         base = self.latest_version()
-        current = self.files(base)
+        base_snap = self.snapshot(base)
+        current = list(base_snap)
         if not current:
             raise ValueError(f"table {self.table_dir} has no committed data")
         # DV-aware like compact: the layout rewrite must not resurrect
         # merge-on-read deletes, and retires the rewritten files' vectors
         base_dvm = self._dv_map_checked(base)
-        df = self._scan_files(spark, current, dvm=base_dvm)
+        df = self._scan_files(spark, current, dvm=base_dvm, stats=base_snap)
         width = 1 << bits
         bounds = df.agg(
             F.min(F.col(x_col)).alias("nx"),
@@ -1458,7 +1590,9 @@ class TableLog:
             )
         # scan with the SAME base dv view the validator diffs against —
         # a racer's vector landing mid-read must conflict, not leak in
-        existing = self._scan_files(spark, touched, dvm=base_dvm)
+        existing = self._scan_files(
+            spark, touched, dvm=base_dvm, stats=base_snap
+        )
         keep = existing.join(
             F.broadcast(updates.select(key_col).distinct()), key_col, "left_anti"
         )
@@ -1575,7 +1709,9 @@ class TableLog:
             )
         # scan with the SAME base dv view the validator diffs against —
         # a racer's vector landing mid-read must conflict, not leak in
-        existing = self._scan_files(spark, touched, dvm=base_dvm)
+        existing = self._scan_files(
+            spark, touched, dvm=base_dvm, stats=base_snap
+        )
         keep = existing.join(
             F.broadcast(batch.select(key_col).distinct()), key_col, "left_anti"
         )
@@ -1649,7 +1785,9 @@ class TableLog:
             return self.commit(op="delete", txn=txn, validate=_validate)
         # scan with the SAME base dv view the validator diffs against —
         # a racer's vector landing mid-read must conflict, not leak in
-        existing = self._scan_files(spark, touched, dvm=base_dvm)
+        existing = self._scan_files(
+            spark, touched, dvm=base_dvm, stats=base_snap
+        )
         # NULL-key rows never satisfy [lo, hi] (three-valued BETWEEN is
         # NULL, not true), so a range DELETE must KEEP them — a bare
         # ~between() would evaluate to NULL and silently drop them
@@ -1875,21 +2013,10 @@ class TableLog:
         the snapshot's files."""
         from pyspark.sql import functions as F
 
-        names = list(snap)
-        names_set = set(names)
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        tagged = reader.parquet(
-            *[os.path.join(self.table_dir, n) for n in names]
-        ).select(
-            "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
+        tagged = self._with_row_id(
+            self._read_parquet(spark, list(snap), snap, merge_schema=merge_schema)
         )
-        active = {n: d for n, d in dvm.items() if n in names_set}
+        active = {n: d for n, d in dvm.items() if n in snap}
         if active:
             old = self._read_dv_rows(spark, active)
             tagged = tagged.join(
@@ -2166,7 +2293,7 @@ class TableLog:
 
         _validate = self._strict_dv_validator(base, snap, dvm, "purge")
 
-        clean = self._scan_files(spark, affected, dvm=dvm)
+        clean = self._scan_files(spark, affected, dvm=dvm, stats=snap)
         adds = self._land_files(clean)
         return self.commit(
             add=adds,
@@ -2250,7 +2377,9 @@ class TableLog:
         if touched:
             # scan with the SAME base dv view the validator diffs
             # against — a racer's vector must conflict, not leak in
-            existing = self._scan_files(spark, touched, dvm=base_dvm)
+            existing = self._scan_files(
+                spark, touched, dvm=base_dvm, stats=base_snap
+            )
             carried = existing.filter(
                 F.col(self.stats_col).isNull()
                 | ~F.col(self.stats_col).between(lo, hi)
@@ -2354,7 +2483,11 @@ class TableLog:
         # time (merge-on-read); time travel to a pre-delete version sees
         # the rows because that version's dv map lacks the vector
         df = self._scan_files(
-            spark, names, merge_schema=merge_schema, dvm=self._dv_map_checked(version)
+            spark,
+            names,
+            merge_schema=merge_schema,
+            dvm=self._dv_map_checked(version),
+            stats=snap,
         )
         if key_between is not None or col_between or key_eq is not None:
             from pyspark.sql import functions as F
@@ -2403,6 +2536,7 @@ class TableLog:
         hi = head if until_version is None else until_version
         self._require_range_manifests(since_version, hi, "read_changes")
         adds: list[str] = []
+        add_stats: dict[str, dict] = {}
         for v in self.versions():
             if v <= since_version or v > hi:
                 continue
@@ -2424,12 +2558,11 @@ class TableLog:
                     "(rewrites re-add existing rows)"
                 )
             adds.extend(m.get("add", ()))
+            add_stats.update(m.get("stats") or {})
         if not adds:
             # empty feed with the newest available schema
             return self._empty_snapshot_frame(spark, hi)
-        return spark.read.parquet(
-            *[os.path.join(self.table_dir, n) for n in adds]
-        )
+        return self._read_parquet(spark, adds, add_stats)
 
     def _empty_snapshot_frame(self, spark: SparkSession, hi: int | None):
         """An EMPTY frame carrying the table's schema, for change-feed
@@ -2577,19 +2710,21 @@ class TableLog:
                     run_dvm.pop(f, None)
                 else:
                     run_dvm[f] = d
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
+        # no commit in the range removes a file, so every file it reads
+        # is live at hi, with the read schema its entry recorded
+        file_stats = self.snapshot(hi) if add_map or dv_events else {}
         parts: list[DataFrame] = []
         if add_map:
-            amap = spark.createDataFrame(
+            amap = local_frame(
+                spark,
                 add_map,
                 "__file string, _commit_version bigint, _change_type string",
             )
-            rows = reader.parquet(
-                *sorted(
-                    os.path.join(self.table_dir, f) for f, _, _ in add_map
-                )
+            rows = self._read_parquet(
+                spark,
+                sorted(f for f, _, _ in add_map),
+                file_stats,
+                merge_schema=merge_schema,
             ).select(
                 "*",
                 F.element_at(
@@ -2603,10 +2738,10 @@ class TableLog:
             pairs = [(v, f, s, "new") for v, f, s, _ in dv_events] + [
                 (v, f, o, "old") for v, f, _, o in dv_events if o
             ]
-            pdf = spark.createDataFrame(
-                pairs, "v bigint, file string, src string, role string"
+            pdf = local_frame(
+                spark, pairs, "v bigint, file string, src string, role string"
             )
-            dvr = spark.read.parquet(
+            dvr = spark.read.schema(_DV_SCHEMA).parquet(
                 *sorted({os.path.join(self.table_dir, p[2]) for p in pairs})
             ).select(
                 "file",
@@ -2628,21 +2763,16 @@ class TableLog:
                 .filter(F.col("has_new") & ~F.col("has_old"))
                 .select("v", "file", "pos")
             )
-            data = reader.parquet(
-                *sorted(
-                    {
-                        os.path.join(self.table_dir, f)
-                        for _, f, _, _ in dv_events
-                    }
+            data = self._with_row_id(
+                self._read_parquet(
+                    spark,
+                    sorted({f for _, f, _, _ in dv_events}),
+                    file_stats,
+                    merge_schema=merge_schema,
                 )
-            ).select(
-                "*",
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("__file"),
-                F.col("_metadata.row_index").alias("__pos"),
             )
-            cmap = spark.createDataFrame(
+            cmap = local_frame(
+                spark,
                 sorted(vmap.items()),
                 "_commit_version bigint, _change_type string",
             )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from c3dc_etl_spark.operators.graph import connected_components, dedup_assignment
@@ -194,6 +195,94 @@ def test_seed_type_validated_against_edges(spark):
         sssp_bounded(wts, "1", rounds=2)
     with pytest.raises(TypeError, match="seed must be"):
         sssp_bounded(wts, True, rounds=2)
+
+
+_SEED_EDGES = [(1, 2, 4), (1, 3, 1), (3, 2, 1), (2, 4, 1), (4, 5, 2), (6, 1, 1)]
+
+
+def _bfs_reference(edges, source, max_hops):
+    hops, frontier = {source: 0}, [source]
+    for h in range(1, max_hops + 1):
+        frontier = sorted(
+            {v for u, v, _ in edges if u in frontier and v not in hops}
+        )
+        hops.update((v, h) for v in frontier)
+    return hops
+
+
+def _sssp_reference(edges, source, rounds):
+    dist = {source: 0}
+    for _ in range(rounds):
+        nxt = dict(dist)
+        for u, v, w in edges:
+            if u in dist and dist[u] + w < nxt.get(v, float("inf")):
+                nxt[v] = dist[u] + w
+        dist = nxt
+    return dist
+
+
+@pytest.mark.parametrize(
+    "node_type, encode, seed_type",
+    [
+        ("BIGINT", int, "bigint"),
+        ("INT", int, "bigint"),
+        ("STRING", lambda n: f"n{n}", "string"),
+        ("DECIMAL(12,0)", int, "decimal(12,0)"),
+    ],
+)
+def test_bfs_sssp_seeds_per_node_type(spark, node_type, encode, seed_type):
+    """The seed is a LocalRelation typed per _seed_node_type's contract;
+    BFS and SSSP return the reference rows for every node type."""
+    from decimal import Decimal
+
+    from c3dc_etl_spark.operators.graph import bfs_hops, sssp_bounded
+
+    def plain(v):
+        return int(v) if isinstance(v, Decimal) else v
+
+    edges = [(encode(u), encode(v), w) for u, v, w in _SEED_EDGES]
+    rows = [
+        (Decimal(u), Decimal(v), w) if node_type.startswith("DECIMAL")
+        else (u, v, w)
+        for u, v, w in edges
+    ]
+    df = spark.createDataFrame(
+        rows, f"src {node_type}, dst {node_type}, w BIGINT"
+    )
+    seed = encode(1)
+    for max_hops in (0, 1, 3):
+        got = bfs_hops(df, seed, max_hops=max_hops)
+        assert got.schema["node"].dataType.simpleString() == seed_type
+        assert {plain(r["node"]): r["hops"] for r in got.collect()} == (
+            _bfs_reference(edges, seed, max_hops)
+        )
+    for rounds in (0, 1, 3):
+        got = sssp_bounded(df, seed, rounds=rounds)
+        assert got.schema["node"].dataType.simpleString() == seed_type
+        assert {plain(r["node"]): r["dist"] for r in got.collect()} == (
+            _sssp_reference(edges, seed, rounds)
+        )
+
+
+def test_decimal_seed_contract(spark):
+    """DECIMAL(p,0) node columns take int seeds that fit p digits; a
+    fractional DECIMAL is not a node id."""
+    from decimal import Decimal
+
+    from c3dc_etl_spark.operators.graph import bfs_hops
+
+    d3 = spark.createDataFrame(
+        [(Decimal(1), Decimal(2))], "src DECIMAL(3,0), dst DECIMAL(3,0)"
+    )
+    with pytest.raises(ValueError, match="does not fit"):
+        bfs_hops(d3, 1000, max_hops=1)
+    with pytest.raises(TypeError, match="str seed"):
+        bfs_hops(d3, "1", max_hops=1)
+    frac = spark.createDataFrame(
+        [(Decimal("1.5"), Decimal("2.5"))], "src DECIMAL(4,1), dst DECIMAL(4,1)"
+    )
+    with pytest.raises(TypeError, match="int seed"):
+        bfs_hops(frac, 1, max_hops=1)
 
 
 def test_default_driver_mem_derivation():

@@ -31,6 +31,26 @@ def _orders(spark):
     )
 
 
+def _key_range_batches(df, col, n=4):
+    """``df`` split into ``n`` disjoint ascending ``col`` ranges. An
+    append lands ``defaultParallelism // 4`` files, so a multi-file
+    layout with disjoint per-file envelopes is built explicitly — one
+    append per range — to hold at any core count."""
+    lo, hi = df.agg(F.min(col), F.max(col)).first()
+    step = (hi - lo) // n + 1
+    return [
+        df.filter(
+            (F.col(col) >= lo + i * step) & (F.col(col) < lo + (i + 1) * step)
+        )
+        for i in range(n)
+    ]
+
+
+def _append_key_ranges(log, df, col, n=4):
+    for batch in _key_range_batches(df, col, n):
+        log.append(batch)
+
+
 def test_append_compact_timetravel_roundtrip(spark, tmp_path):
     orders = _orders(spark)
     log = TableLog(str(tmp_path / "t"))
@@ -119,7 +139,7 @@ def test_read_empty_table_raises(spark, tmp_path):
 def test_merge_upsert_rewrites_only_touched_files(spark, tmp_path):
     orders = _orders(spark)
     log = TableLog(str(tmp_path / "t"), stats_col="o_orderkey")
-    log.append(orders)
+    _append_key_ranges(log, orders, "o_orderkey")
     before = log.snapshot()
     assert len(before) > 1, "need multiple files for a pruning test"
     # every file carries tight stats from the range-partitioned landing
@@ -157,7 +177,7 @@ def test_merge_upsert_inserts_unmatched_keys(spark, tmp_path):
 def test_stats_pruned_range_read(spark, tmp_path):
     orders = _orders(spark)
     log = TableLog(str(tmp_path / "t"), stats_col="o_orderkey")
-    log.append(orders)
+    _append_key_ranges(log, orders, "o_orderkey")
     lo, hi = 10, 40
     opened, total = log.pruned_file_count((lo, hi))
     assert opened < total, "narrow range must skip files"
@@ -173,15 +193,16 @@ def test_checkpoint_replay_matches_full_replay(spark, tmp_path):
     orders = _orders(spark)
     log = TableLog(str(tmp_path / "t"), stats_col="o_orderkey",
                    checkpoint_interval=3)
-    for i in range(7):
-        log.append(orders.filter(F.col("o_orderkey") % 7 == i))
+    batches = _key_range_batches(orders, "o_orderkey", 7)
+    for batch in batches:
+        log.append(batch)
     # auto-checkpoints landed at versions 3 and 6
     assert {3, 6} <= set(log._checkpoint_versions())
     # snapshot via checkpoint tail == full content
     assert _rows(log.read(spark)) == _rows(orders)
     # time travel BELOW a checkpoint still replays correctly
     v2 = _rows(log.read(spark, version=2))
-    want = _rows(orders.filter(F.col("o_orderkey") % 7 <= 2))
+    want = _rows(batches[0].union(batches[1]).union(batches[2]))
     assert v2 == want
     # stats survive the checkpoint round-trip (pruning still works)
     opened, total = log.pruned_file_count((10, 40))
@@ -397,7 +418,7 @@ def test_optimize_zorder_keeps_manifest_stats(spark, tmp_path):
 def test_delete_where_rewrites_only_touched_files(spark, tmp_path):
     orders = _orders(spark)
     log = TableLog(str(tmp_path / "del"), stats_col="o_orderkey")
-    log.append(orders)
+    _append_key_ranges(log, orders, "o_orderkey")
     before = log.snapshot()
     touched = {
         n for n, st in before.items() if st["max"] >= 100 and st["min"] <= 500
@@ -411,7 +432,7 @@ def test_delete_where_rewrites_only_touched_files(spark, tmp_path):
     assert not (touched & set(after))
     got = _rows(log.read(spark))
     assert got == [r for r in pre if not (100 <= r[0] <= 500)]
-    assert _rows(log.read(spark, version=0)) == pre  # time travel intact
+    assert _rows(log.read(spark, version=v - 1)) == pre  # time travel intact
 
 
 def test_delete_where_conflicts_with_overlapping_append(spark, tmp_path):
@@ -545,10 +566,11 @@ def test_multi_column_stats_manifest_pruning_after_zorder(spark, tmp_path):
         stats_col="l_orderkey",
         extra_stats_cols=["l_partkey", "l_suppkey"],
     )
-    log.append(li.repartition(8))
+    # orderkey-ranged files: every file spans both box dimensions
+    _append_key_ranges(log, li, "l_orderkey", 8)
     box = {"l_partkey": (20, 50), "l_suppkey": (2, 3)}
     before, total_b = log.pruned_file_count_multi(box)
-    assert before == total_b  # hash layout: nothing prunable
+    assert before == total_b  # orderkey layout: nothing prunable
     v = log.optimize_zorder(spark, "l_partkey", "l_suppkey", target_files=8)
     after, total_a = log.pruned_file_count_multi(box, version=v)
     assert after < before and after <= total_a // 2
@@ -579,7 +601,7 @@ def test_bloom_point_lookup_skips_files_exactly(spark, tmp_path):
         bloom_bits=4096,
         bloom_hashes=4,
     )
-    log.append(orders)
+    _append_key_ranges(log, orders, "o_orderkey")
     keys = [r["o_orderkey"] for r in orders.limit(3).collect()]
     for k in keys:
         got = _rows(log.read(spark, key_eq=k))
